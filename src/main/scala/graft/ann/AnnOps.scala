@@ -109,8 +109,8 @@ object AnnOps {
     // persist: the banded frame feeds BOTH sides of the candidate
     // self-join, and self-join exchange reuse is unreliable (observed on
     // simhash/lshPairs: the subtree re-executed once per side) — one
-    // (embedding, norm, bucket) row per (vector, table), released with the
-    // query's RDDs
+    // (embedding, norm, bucket) row per (vector, table), which stays cached
+    // after the query until someone unpersists it
     vectors.select(col("vec_id"), col("embedding"),
         sqrt(norm2(col("embedding"))).as("nrm"),
         posexplode(graft.functions.LshBuckets.column(

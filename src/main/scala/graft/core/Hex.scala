@@ -185,17 +185,7 @@ object Hex {
     s4.select(cols(keep) :+ id.as(out): _*)
   }
 
-  // ---- hex-vs-rect cover support (SAT) -----------------------------------
-
-  /** Axial float coords (pre-rounding) as Columns — the candidate-range
-    * head of the cover enumeration. */
-  def axialFloatColumns(lon: Column, lat: Column, resN: Int): (Column, Column) = {
-    val co = lit(cosT(resN)); val si = lit(sinT(resN))
-    val x = co * lon + si * lat
-    val y = (-si) * lon + co * lat
-    val sz = size(resN)
-    ((lit(Sq3 / 3.0) * x - lit(1.0 / 3.0) * y) / sz, (lit(2.0 / 3.0) * y) / sz)
-  }
+  // ---- hex-vs-rect cover support (SAT; functions.HexRectCover) ----------
 
   /** Hexagon support radius along the world x / y axes (max |vertex
     * component| in the rotated frame) — per-res constants for the SAT

@@ -74,6 +74,8 @@ object DedupOps {
     * generation is the shingle equi-join (pairs sharing >= 1 shingle),
     * intersection counted per pair, set sizes joined back in. */
   def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
+    // cached: both join sides and the sizes aggregate read it; the blocks
+    // stay cached after the query until someone unpersists them
     val sh = shingleHashes(docs).cache()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = sh.as("a"); val b = sh.as("b")
@@ -109,19 +111,6 @@ object DedupOps {
   val MinhashP = 2147483647L // 2^31 - 1
   def hashParams(k: Int): Seq[(Long, Long)] =
     (0 until k).map(i => (2L * i + 3L, 104729L * (i + 1) + 7L))
-
-  /** MinHash signatures: sig[k] = min over shingles of (a_k*h + b_k) mod p.
-    * One explode + one (doc, k) aggregate, map-side combinable. */
-  def minhashSignatures(docs: DataFrame, k: Int): DataFrame = {
-    val sh = shingleHashes(docs)
-    val params = hashParams(k)
-    val kDf = docs.sparkSession.createDataFrame(
-      params.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-    ).toDF("k", "ha", "hb")
-    sh.crossJoin(broadcast(kDf))
-      .groupBy("doc_id", "k")
-      .agg(min((col("ha") * col("sh_hash") + col("hb")) % MinhashP).as("mh"))
-  }
 
   def minhashSignaturesSql(table: String, k: Int): String = {
     val params = hashParams(k).zipWithIndex
@@ -165,7 +154,7 @@ object DedupOps {
     // consumer when exchange reuse misses (observed: two identical scan
     // stages in the r5 plan). Scale note: this caches one array row per
     // document (bounded by document length), the standard LSH working set;
-    // blocks release when the query's RDDs are GC'd.
+    // the blocks stay cached after the query until someone unpersists them.
     val docSh = shingleHashesRaw(docs).groupBy("doc_id")
       .agg(sort_array(array_distinct(collect_list(col("sh_hash")))).as("shs"))
       .persist()
@@ -284,7 +273,8 @@ object DedupOps {
     // r6: persist the per-doc fingerprints — the frame feeds BOTH sides of
     // the band self-join, and without it the md5-token explode + 32-sum
     // aggregate re-executes when exchange reuse misses (the lshPairs
-    // lesson); one long per document, released with the query's RDDs
+    // lesson); one long per document, which stays cached after the query
+    // until someone unpersists it
     val s = simhash(docs).persist()
     val bandWidth = SimhashBits / SimhashBands
     val banded = s.select(col("doc_id"), col("simhash"),

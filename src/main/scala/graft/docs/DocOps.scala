@@ -17,8 +17,16 @@ import org.apache.spark.sql.functions._
   *
   * Geometry inside text spans is encoded in integer pixel space
   * ("geom:PXPOLY(c0 r0 c1 r1)" over the MODIS grid) so both engines format
-  * identical strings; the cover operator maps pixels -> planar -> lon/lat ->
-  * quadtree cells with the same Column arithmetic as the raster ops. */
+  * identical strings. Every cell cover starts from one head, [[geomBbox]]
+  * (pixels -> planar -> lon/lat bbox with the same Column arithmetic as the
+  * raster ops), and explodes a per-family generator over it: the quadtree
+  * cell rectangle, the S2 st-rect kernel or the hex SAT kernel.
+  *
+  * The spatial doc x tile join is one skeleton for all three families,
+  * [[spatialJoin]]: bbox head, the family's cover, and a broadcast
+  * equi-join on cell_id against the tile side. The tile side is a constant
+  * of (grid, family), so [[tileCells]] evaluates it on the driver with the
+  * family's scalar cell function and ships it as a LocalRelation. */
 object DocOps {
 
   val TileGridN = 8 // MODIS 200x200 split as 8x8 tiles of 25px
@@ -99,12 +107,14 @@ object DocOps {
        |  UNION ALL SELECT doc_id, 3, (doc_id * 17 + 5) % 64 FROM $table)
        |ORDER BY doc_id, "offset"""".stripMargin
 
-  /** Quadtree cell cover of each document's geometry span: parse the
-    * integer pixel box, map the pixel corners through the grid affine and
-    * the (sinusoidal) inverse projection to lon/lat, enumerate the level-L
-    * cell rectangle. Pure Column arithmetic + one explode; the output
-    * (doc_id, cell_id) is the spatial-join key set for doc x tile joins. */
-  def geomCellCover(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
+  // ---- the geometry bbox: the shared head of every cover ------------------
+
+  /** (doc_id, lon_min, lon_max, lat_min, lat_max) of each doc geometry: parse
+    * the integer pixel box, map its corners through the grid affine and the
+    * inverse projection. lon depends on BOTH x and y under sinusoidal, so
+    * each range is the min/max over all four corners (complete-cover
+    * requirement). */
+  private def geomBbox(docsSpans: DataFrame, grid: GridRef): DataFrame = {
     val geomSpan = element_at(filter(col("spans"),
       s => s.getField("text").startsWith("geom:")), 1).getField("text")
     // NOTE: the filter() HOF here is CodegenFallback and therefore a
@@ -114,8 +124,11 @@ object DocOps {
     // arithmetic into ONE generated method past hugeMethodLimit, Spark
     // disabled codegen for the whole stage, and every doc leg regressed
     // 6-8x. The interpreted lookup costs far less than the split stages
-    // save; keep the barrier.
-    // single split instead of four regexp extractions (hot path at 10^12 docs)
+    // save; keep the barrier, and keep every cover's consumer free of
+    // filters over bbox columns: Spark infers isnotnull constraints from
+    // them and pushes those through these projections, inlining a copy of
+    // this lookup per reference (DocOpsSpec counts the copies).
+    // single split instead of four regexp extractions
     val px = docsSpans.select(col("doc_id"), geomSpan.as("g"))
       .withColumn("nums", split(
         substring_index(substring_index(col("g"), "(", -1), ")", 1), " "))
@@ -124,28 +137,91 @@ object DocOps {
       .withColumn("c1", element_at(col("nums"), 3).cast("double"))
       .withColumn("r1", element_at(col("nums"), 4).cast("double"))
     val t = grid.transform
-    // pixel box corners -> planar; y descends with row so (r0 -> maxy).
-    // lon depends on BOTH x and y under sinusoidal, so the lon range is the
-    // min/max over all four corners (complete-cover requirement).
+    // pixel box corners -> planar; y descends with row so (r0 -> maxy)
     val xMin = lit(t.a) * col("c0") + lit(t.c)
     val xMax = lit(t.a) * col("c1") + lit(t.c)
     val yMax = lit(t.e) * col("r0") + lit(t.f)
     val yMin = lit(t.e) * col("r1") + lit(t.f)
     val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax))
       .map { case (x, y) => WarpOps.inverseColumns(grid.crs, x, y) }
-    val lonMin = least(corners.map(_._1): _*)
-    val lonMax = greatest(corners.map(_._1): _*)
-    val latMin = least(corners.map(_._2): _*)
-    val latMax = greatest(corners.map(_._2): _*)
-    val ix0 = Cells.ixColumn(lonMin, level); val ix1 = Cells.ixColumn(lonMax, level)
-    val iy0 = Cells.iyColumn(latMin, level); val iy1 = Cells.iyColumn(latMax, level)
-    px.select(col("doc_id"), ix0.as("ix0"), ix1.as("ix1"), iy0.as("iy0"), iy1.as("iy1"))
+    px.select(col("doc_id"),
+      least(corners.map(_._1): _*).as("lon_min"),
+      greatest(corners.map(_._1): _*).as("lon_max"),
+      least(corners.map(_._2): _*).as("lat_min"),
+      greatest(corners.map(_._2): _*).as("lat_max"))
+  }
+
+  /** DuckDB sinusoidal inverse of planar expressions, in
+    * [[WarpOps.inverseColumns]]' op order. */
+  private def inverseSql(grid: GridRef, xE: String, yE: String): (String, String) = {
+    val (r, lon0) = grid.crs.proj match {
+      case Sinusoidal(rr, l0) => (rr, l0)
+      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
+    }
+    (s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0",
+     s"(($yE) / $r) / ${WarpOps.D2R}")
+  }
+
+  /** DuckDB mirror of [[geomBbox]] over a flat documents table (the pixel
+    * box comes from the same doc_id arithmetic as [[interleave]]). */
+  private def geomBboxSql(table: String, grid: GridRef): String = {
+    val t = grid.transform
+    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
+    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
+    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
+    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
+    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
+    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax))
+      .map { case (x, y) => inverseSql(grid, x, y) }
+    s"""SELECT doc_id, LEAST(${corners.map(_._1).mkString(", ")}) AS lon_min,
+       |  GREATEST(${corners.map(_._1).mkString(", ")}) AS lon_max,
+       |  LEAST(${corners.map(_._2).mkString(", ")}) AS lat_min,
+       |  GREATEST(${corners.map(_._2).mkString(", ")}) AS lat_max
+       |FROM $table""".stripMargin
+  }
+
+  // ---- cell covers ---------------------------------------------------------
+
+  /** Quadtree cell cover of each document's geometry: the level-L cell
+    * rectangle of its lon/lat bbox. Pure Column arithmetic + two explodes;
+    * the output (doc_id, cell_id) is the spatial-join key set for doc x
+    * tile joins. */
+  def geomCellCover(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame =
+    quadCoverFromBbox(geomBbox(docsSpans, grid), level)
+
+  private def quadCoverFromBbox(bbox: DataFrame, level: Int): DataFrame =
+    bbox.select(col("doc_id"),
+        Cells.ixColumn(col("lon_min"), level).as("ix0"),
+        Cells.ixColumn(col("lon_max"), level).as("ix1"),
+        Cells.iyColumn(col("lat_min"), level).as("iy0"),
+        Cells.iyColumn(col("lat_max"), level).as("iy1"))
       .select(col("doc_id"), explode(sequence(col("iy0"), col("iy1"))).as("iy"),
               col("ix0"), col("ix1"))
       .select(col("doc_id"), col("iy"), explode(sequence(col("ix0"), col("ix1"))).as("ix"))
       .select(col("doc_id"),
         shiftleft(Cells.mortonColumn(col("ix"), col("iy"), level), 5)
           .bitwiseOR(lit(level.toLong)).as("cell_id"))
+
+  def geomCellCoverSql(table: String, grid: GridRef, level: Int): String = {
+    val n = 1L << level
+    def ixE(lonE: String) =
+      s"LEAST(${n - 1}, GREATEST(0, CAST(FLOOR((($lonE) + 180.0)/360.0*$n) AS BIGINT)))"
+    def iyE(latE: String) =
+      s"LEAST(${n - 1}, GREATEST(0, CAST(FLOOR((($latE) + 90.0)/180.0*$n) AS BIGINT)))"
+    val morton = (0 until level).flatMap { b =>
+      Seq(s"((ix & ${1L << b}) << $b)", s"((iy & ${1L << b}) << ${b + 1})")
+    }.mkString(" | ")
+    s"""WITH _b AS (${geomBboxSql(table, grid)}),
+       |px AS (
+       |  SELECT doc_id, ${ixE("lon_min")} AS ix0, ${ixE("lon_max")} AS ix1,
+       |         ${iyE("lat_min")} AS iy0, ${iyE("lat_max")} AS iy1
+       |  FROM _b),
+       |cells AS (
+       |  SELECT doc_id, unnest(generate_series(iy0, iy1)) AS iy, ix0, ix1 FROM px),
+       |cells2 AS (
+       |  SELECT doc_id, iy, unnest(generate_series(ix0, ix1)) AS ix FROM cells)
+       |SELECT doc_id, (($morton) << 5) | $level AS cell_id
+       |FROM cells2 ORDER BY doc_id, cell_id""".stripMargin
   }
 
   /** S2-style cell cover of each doc geometry (the north_rule's "H3 AND S2
@@ -159,30 +235,8 @@ object DocOps {
     * DuckDB oracle exactly mirrorable. */
   def geomCellCoverS2(docsSpans: DataFrame, grid: GridRef, level: Int,
                       samples: Int = 9): DataFrame = {
-    val geomSpan = element_at(filter(col("spans"),
-      s => s.getField("text").startsWith("geom:")), 1).getField("text")
-    val px = docsSpans.select(col("doc_id"), geomSpan.as("g"))
-      .withColumn("nums", split(
-        substring_index(substring_index(col("g"), "(", -1), ")", 1), " "))
-      .withColumn("c0", element_at(col("nums"), 1).cast("double"))
-      .withColumn("r0", element_at(col("nums"), 2).cast("double"))
-      .withColumn("c1", element_at(col("nums"), 3).cast("double"))
-      .withColumn("r1", element_at(col("nums"), 4).cast("double"))
-    val t = grid.transform
-    val xMin = lit(t.a) * col("c0") + lit(t.c)
-    val xMax = lit(t.a) * col("c1") + lit(t.c)
-    val yMax = lit(t.e) * col("r0") + lit(t.f)
-    val yMin = lit(t.e) * col("r1") + lit(t.f)
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax))
-      .map { case (x, y) => WarpOps.inverseColumns(grid.crs, x, y) }
-    val lonMin = least(corners.map(_._1): _*)
-    val lonMax = greatest(corners.map(_._1): _*)
-    val latMin = least(corners.map(_._2): _*)
-    val latMax = greatest(corners.map(_._2): _*)
     val k = (samples - 1).toDouble
-    val lattice = px
-      .select(col("doc_id"), lonMin.as("lon_min"), lonMax.as("lon_max"),
-              latMin.as("lat_min"), latMax.as("lat_max"))
+    val lattice = geomBbox(docsSpans, grid)
       .select(col("*"), explode(sequence(lit(0), lit(samples - 1))).as("i"))
       .select(col("*"), explode(sequence(lit(0), lit(samples - 1))).as("j"))
       .select(col("doc_id"),
@@ -195,31 +249,19 @@ object DocOps {
       .distinct()
   }
 
-  /** (doc_id, lon_min, lon_max, lat_min, lat_max) of each doc geometry —
-    * the shared head of every cover variant (identical arithmetic to the
-    * inline versions above). */
-  private def geomBbox(docsSpans: DataFrame, grid: GridRef): DataFrame = {
-    val geomSpan = element_at(filter(col("spans"),
-      s => s.getField("text").startsWith("geom:")), 1).getField("text")
-    val px = docsSpans.select(col("doc_id"), geomSpan.as("g"))
-      .withColumn("nums", split(
-        substring_index(substring_index(col("g"), "(", -1), ")", 1), " "))
-      .withColumn("c0", element_at(col("nums"), 1).cast("double"))
-      .withColumn("r0", element_at(col("nums"), 2).cast("double"))
-      .withColumn("c1", element_at(col("nums"), 3).cast("double"))
-      .withColumn("r1", element_at(col("nums"), 4).cast("double"))
-    val t = grid.transform
-    val xMin = lit(t.a) * col("c0") + lit(t.c)
-    val xMax = lit(t.a) * col("c1") + lit(t.c)
-    val yMax = lit(t.e) * col("r0") + lit(t.f)
-    val yMin = lit(t.e) * col("r1") + lit(t.f)
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax))
-      .map { case (x, y) => WarpOps.inverseColumns(grid.crs, x, y) }
-    px.select(col("doc_id"),
-      least(corners.map(_._1): _*).as("lon_min"),
-      greatest(corners.map(_._1): _*).as("lon_max"),
-      least(corners.map(_._2): _*).as("lat_min"),
-      greatest(corners.map(_._2): _*).as("lat_max"))
+  def geomCellCoverS2Sql(table: String, grid: GridRef, level: Int,
+                         samples: Int = 9): String = {
+    val k = (samples - 1).toDouble
+    val lattice =
+      s"""SELECT doc_id,
+         |  lon_min + (lon_max - lon_min) * (CAST(i.i AS DOUBLE) / $k) AS lon,
+         |  lat_min + (lat_max - lat_min) * (CAST(j.j AS DOUBLE) / $k) AS lat
+         |FROM (${geomBboxSql(table, grid)}) b,
+         |     generate_series(0, ${samples - 1}) i(i),
+         |     generate_series(0, ${samples - 1}) j(j)""".stripMargin
+    s"""SELECT DISTINCT doc_id, cell_id FROM (
+       |${Cells.s2CellIdSql(lattice, "lon", "lat", level, Seq("doc_id"))}
+       |) ORDER BY doc_id, cell_id""".stripMargin
   }
 
   /** Sliver-free S2 cover via exact st-rect enumeration — the production
@@ -256,203 +298,14 @@ object DocOps {
         col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"),
         level, latticeSamples)).as("cell_id"))
 
-  def geomCellCoverS2Sql(table: String, grid: GridRef, level: Int,
-                         samples: Int = 9): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
-    val k = (samples - 1).toDouble
-    val lattice =
-      s"""SELECT doc_id,
-         |  lon_min + (lon_max - lon_min) * (CAST(i.i AS DOUBLE) / $k) AS lon,
-         |  lat_min + (lat_max - lat_min) * (CAST(j.j AS DOUBLE) / $k) AS lat
-         |FROM (SELECT doc_id, $lonMin AS lon_min, $lonMax AS lon_max,
-         |             $latMin AS lat_min, $latMax AS lat_max FROM $table) b,
-         |     generate_series(0, ${samples - 1}) i(i),
-         |     generate_series(0, ${samples - 1}) j(j)""".stripMargin
-    s"""SELECT DISTINCT doc_id, cell_id FROM (
-       |${Cells.s2CellIdSql(lattice, "lon", "lat", level, Seq("doc_id"))}
-       |) ORDER BY doc_id, cell_id""".stripMargin
-  }
-
-  /** H3-style hex cell cover of each doc geometry bbox (the north_rule's
-    * "H3 (res 7-12) ... cell covers for every geometry"): candidate axial
-    * range from the bbox corners' float axial hull expanded by the EXACT
-    * fractional margin — the axial map is linear in lon/lat so the rect's
-    * axial image is exactly the corner hull, and an intersecting hexagon's
-    * centre sits within circumradius `size` of the rect, i.e. within
-    * |grad qf|*size = |grad rf|*size = (2/3)*size/size = 2/3 axial units
-    * of the hull. Candidates are therefore ceil(min − 0.67) ..
-    * floor(max + 0.67) per axis (0.67 = 2/3 plus fp slack, identical
-    * literal both engines); the range always contains an integer (width
-    * > 1.34). This replaces the earlier integer ±1 margin: for sub-hex
-    * rects the candidate set drops from ~4x4 to ~1-2x1-2 before the
-    * EXACT hexagon-vs-rectangle separating-axis test — 5 axes: world x/y
-    * plus the hexagon's three edge normals, all per-res literal constants.
-    * Map-only explode + codegen filter; each covering cell emitted exactly
-    * once, no sampling, no distinct. */
-  def geomCellCoverHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame = {
-    val bbox = geomBbox(docsSpans, grid)
-    val cornerCols = Seq(("lon_min", "lat_min"), ("lon_max", "lat_min"),
-                         ("lon_min", "lat_max"), ("lon_max", "lat_max"))
-    val qrs = cornerCols.map { case (lo, la) =>
-      Hex.axialFloatColumns(col(lo), col(la), res) }
-    val ranged = bbox.select(col("doc_id"),
-      ((col("lon_min") + col("lon_max")) / 2.0).as("rcx"),
-      ((col("lat_min") + col("lat_max")) / 2.0).as("rcy"),
-      ((col("lon_max") - col("lon_min")) / 2.0).as("hw"),
-      ((col("lat_max") - col("lat_min")) / 2.0).as("hh"),
-      ceil(least(qrs.map(_._1): _*) - 0.67d).cast("long").as("q0"),
-      floor(greatest(qrs.map(_._1): _*) + 0.67d).cast("long").as("q1"),
-      ceil(least(qrs.map(_._2): _*) - 0.67d).cast("long").as("r0"),
-      floor(greatest(qrs.map(_._2): _*) + 0.67d).cast("long").as("r1"))
-    val cand = ranged
-      .select(col("*"), explode(sequence(col("q0"), col("q1"))).as("hq"))
-      .select(col("*"), explode(sequence(col("r0"), col("r1"))).as("hr"))
-    val sz = Hex.size(res)
-    val co = Hex.cosT(res); val si = Hex.sinT(res)
-    val sq3 = math.sqrt(3.0)
-    val lx = lit(sz) * (lit(sq3) * col("hq") + lit(sq3 / 2.0) * col("hr"))
-    val ly = lit(sz) * (lit(1.5) * col("hr"))
-    val cx = lit(co) * lx - lit(si) * ly
-    val cy = lit(si) * lx + lit(co) * ly
-    val dx = cx - col("rcx"); val dy = cy - col("rcy")
-    val sepX = abs(dx) > lit(Hex.supportX(res)) + col("hw")
-    val sepY = abs(dy) > lit(Hex.supportY(res)) + col("hh")
-    val sepN = Hex.normalAngles(res).map { a =>
-      val ux = math.cos(a); val uy = math.sin(a)
-      abs(dx * ux + dy * uy) >
-        lit(Hex.apothem(res)) + col("hw") * math.abs(ux) + col("hh") * math.abs(uy)
-    }
-    cand.filter(!(sepX || sepY || sepN.reduce(_ || _)))
-      .select(col("doc_id"),
-        shiftleft(shiftleft(col("hq") + (1L << 28), 29)
-          .bitwiseOR(col("hr") + (1L << 28)), 5)
-          .bitwiseOR(lit(res.toLong)).as("cell_id"))
-  }
-
-  /** DuckDB mirror of [[geomCellCoverHex]]. */
-  def geomCellCoverHexSql(table: String, grid: GridRef, res: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
-    val sz = Hex.size(res)
-    val co = Hex.cosT(res); val si = Hex.sinT(res)
-    val sq3 = math.sqrt(3.0)
-    // axial float of a (lonE, latE) in the res frame
-    def d(v: Double): String = WarpOps.dlit(v)
-    def qf(lonE: String, latE: String): String = {
-      val x = s"(${d(co)} * ($lonE) + ${d(si)} * ($latE))"
-      val y = s"(-${d(si)} * ($lonE) + ${d(co)} * ($latE))"
-      s"((${d(sq3 / 3.0)} * $x - ${d(1.0 / 3.0)} * $y) / ${d(sz)})"
-    }
-    def rf(lonE: String, latE: String): String = {
-      val y = s"(-${d(si)} * ($lonE) + ${d(co)} * ($latE))"
-      s"((${d(2.0 / 3.0)} * $y) / ${d(sz)})"
-    }
-    val cc = Seq(("lon_min", "lat_min"), ("lon_max", "lat_min"),
-                 ("lon_min", "lat_max"), ("lon_max", "lat_max"))
-    val qfs = cc.map { case (lo, la) => qf(lo, la) }
-    val rfs = cc.map { case (lo, la) => rf(lo, la) }
-    val sepN = Hex.normalAngles(res).map { a =>
-      val ux = math.cos(a); val uy = math.sin(a)
-      s"(ABS(_dx * ${d(ux)} + _dy * ${d(uy)}) > ${d(Hex.apothem(res))} + hw * ${d(math.abs(ux))} + hh * ${d(math.abs(uy))})"
-    }
-    val bias = 1L << 28
-    s"""WITH _b AS (
-       |  SELECT doc_id, $lonMin AS lon_min, $lonMax AS lon_max,
-       |         $latMin AS lat_min, $latMax AS lat_max FROM $table),
-       |_rng AS (
-       |  SELECT doc_id,
-       |    (lon_min + lon_max) / 2.0 AS rcx, (lat_min + lat_max) / 2.0 AS rcy,
-       |    (lon_max - lon_min) / 2.0 AS hw, (lat_max - lat_min) / 2.0 AS hh,
-       |    CAST(CEIL(LEAST(${qfs.mkString(", ")}) - 0.67) AS BIGINT) AS q0,
-       |    CAST(FLOOR(GREATEST(${qfs.mkString(", ")}) + 0.67) AS BIGINT) AS q1,
-       |    CAST(CEIL(LEAST(${rfs.mkString(", ")}) - 0.67) AS BIGINT) AS r0,
-       |    CAST(FLOOR(GREATEST(${rfs.mkString(", ")}) + 0.67) AS BIGINT) AS r1
-       |  FROM _b),
-       |_cq AS (SELECT *, unnest(generate_series(q0, q1)) AS hq FROM _rng),
-       |_cr AS (SELECT *, unnest(generate_series(r0, r1)) AS hr FROM _cq),
-       |_ctr AS (SELECT *,
-       |    ${d(co)} * (${d(sz)} * (${d(sq3)} * hq + ${d(sq3 / 2.0)} * hr)) - ${d(si)} * (${d(sz)} * (1.5 * hr)) AS _hcx,
-       |    ${d(si)} * (${d(sz)} * (${d(sq3)} * hq + ${d(sq3 / 2.0)} * hr)) + ${d(co)} * (${d(sz)} * (1.5 * hr)) AS _hcy
-       |  FROM _cr),
-       |_d AS (SELECT *, _hcx - rcx AS _dx, _hcy - rcy AS _dy FROM _ctr)
-       |SELECT doc_id,
-       |  (((hq + $bias) << 29) | (hr + $bias)) << 5 | $res AS cell_id
-       |FROM _d
-       |WHERE NOT ((ABS(_dx) > ${d(Hex.supportX(res))} + hw)
-       |        OR (ABS(_dy) > ${d(Hex.supportY(res))} + hh)
-       |        OR ${sepN.mkString(" OR ")})
-       |ORDER BY doc_id, cell_id""".stripMargin
-  }
-
   /** DuckDB mirror of [[geomCellCoverS2Rect]] — same bbox arithmetic, same
     * per-corner face/uv CASE chains (CTE-staged), same StEps-guarded st
     * indices, same three-way branch split as the kernel (single-face hull /
     * exact 45°-piece multi-face hull / polar lattice), UNION ALL of the
     * branches. */
   def geomCellCoverS2RectSql(table: String, grid: GridRef, level: Int,
-                             samples: Int = 9): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
-    }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
-    s2RectCoverSqlFromBbox(
-      s"""SELECT doc_id, $lonMin AS lon_min, $lonMax AS lon_max,
-         |       $latMin AS lat_min, $latMax AS lat_max FROM $table""".stripMargin,
-      level, samples)
-  }
+                             samples: Int = 9): String =
+    s2RectCoverSqlFromBbox(geomBboxSql(table, grid), level, samples)
 
   /** The three-branch S2 rect-cover SQL over ANY
     * (doc_id, lon_min, lon_max, lat_min, lat_max) source — the exact
@@ -581,190 +434,175 @@ object DocOps {
        |ORDER BY doc_id, cell_id""".stripMargin
   }
 
-  def geomCellCoverSql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
+  /** H3-style hex cell cover of each doc geometry bbox (the north_rule's
+    * "H3 (res 7-12) ... cell covers for every geometry"): one static kernel
+    * call per doc (functions.HexRectCover) + one explode. The kernel takes
+    * the candidate axial range from the bbox corners' float axial hull
+    * widened by ±0.67 axial units (an intersecting hexagon's centre lies
+    * within 2/3 axial units of the hull), then keeps the candidates that
+    * pass the EXACT hexagon-vs-rectangle separating-axis test on 5 axes:
+    * world x/y plus the hexagon's three edge normals. Each covering cell is
+    * emitted exactly once, no sampling, no distinct. */
+  def geomCellCoverHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame =
+    hexCoverFromBbox(geomBbox(docsSpans, grid), res)
+
+  private def hexCoverFromBbox(bbox: DataFrame, res: Int): DataFrame =
+    bbox.select(col("doc_id"),
+      explode(graft.functions.HexRectCover.column(
+        col("lon_min"), col("lat_min"), col("lon_max"), col("lat_max"), res)).as("cell_id"))
+
+  /** DuckDB mirror of [[geomCellCoverHex]]: the kernel's candidate range and
+    * SAT filter as CTEs, in the kernel's op order. */
+  def geomCellCoverHexSql(table: String, grid: GridRef, res: Int): String = {
+    val sz = Hex.size(res)
+    val co = Hex.cosT(res); val si = Hex.sinT(res)
+    val sq3 = math.sqrt(3.0)
+    // axial float of a (lonE, latE) in the res frame
+    def d(v: Double): String = WarpOps.dlit(v)
+    def qf(lonE: String, latE: String): String = {
+      val x = s"(${d(co)} * ($lonE) + ${d(si)} * ($latE))"
+      val y = s"(-${d(si)} * ($lonE) + ${d(co)} * ($latE))"
+      s"((${d(sq3 / 3.0)} * $x - ${d(1.0 / 3.0)} * $y) / ${d(sz)})"
     }
-    def inv(xE: String, yE: String): (String, String) = {
-      val lat = s"(($yE) / $r) / ${WarpOps.D2R}"
-      val lon = s"(($xE) / ($r * COS(($yE) / $r))) / ${WarpOps.D2R} + $lon0"
-      (lon, lat)
+    def rf(lonE: String, latE: String): String = {
+      val y = s"(-${d(si)} * ($lonE) + ${d(co)} * ($latE))"
+      s"((${d(2.0 / 3.0)} * $y) / ${d(sz)})"
     }
-    val c0 = s"CAST((doc_id * 7) % 180 AS DOUBLE)"
-    val r0 = s"CAST((doc_id * 13) % 180 AS DOUBLE)"
-    val c1 = s"($c0 + 12)"; val r1 = s"($r0 + 12)"
-    val xMin = s"${t.a} * $c0 + ${t.c}"; val xMax = s"${t.a} * $c1 + ${t.c}"
-    val yMax = s"${t.e} * $r0 + ${t.f}"; val yMin = s"${t.e} * $r1 + ${t.f}"
-    val corners = Seq((xMin, yMin), (xMin, yMax), (xMax, yMin), (xMax, yMax)).map((inv _).tupled)
-    val lonMin = s"LEAST(${corners.map(_._1).mkString(", ")})"
-    val lonMax = s"GREATEST(${corners.map(_._1).mkString(", ")})"
-    val latMin = s"LEAST(${corners.map(_._2).mkString(", ")})"
-    val latMax = s"GREATEST(${corners.map(_._2).mkString(", ")})"
-    val n = 1L << level
-    def ixE(lonE: String) =
-      s"LEAST(${n - 1}, GREATEST(0, CAST(FLOOR((($lonE) + 180.0)/360.0*$n) AS BIGINT)))"
-    def iyE(latE: String) =
-      s"LEAST(${n - 1}, GREATEST(0, CAST(FLOOR((($latE) + 90.0)/180.0*$n) AS BIGINT)))"
-    val morton = (0 until level).flatMap { b =>
-      Seq(s"((ix & ${1L << b}) << $b)", s"((iy & ${1L << b}) << ${b + 1})")
-    }.mkString(" | ")
-    s"""WITH px AS (
-       |  SELECT doc_id, ${ixE(lonMin)} AS ix0, ${ixE(lonMax)} AS ix1,
-       |         ${iyE(latMin)} AS iy0, ${iyE(latMax)} AS iy1
-       |  FROM $table),
-       |cells AS (
-       |  SELECT doc_id, unnest(generate_series(iy0, iy1)) AS iy, ix0, ix1 FROM px),
-       |cells2 AS (
-       |  SELECT doc_id, iy, unnest(generate_series(ix0, ix1)) AS ix FROM cells)
-       |SELECT doc_id, (($morton) << 5) | $level AS cell_id
-       |FROM cells2 ORDER BY doc_id, cell_id""".stripMargin
+    val cc = Seq(("lon_min", "lat_min"), ("lon_max", "lat_min"),
+                 ("lon_min", "lat_max"), ("lon_max", "lat_max"))
+    val qfs = cc.map { case (lo, la) => qf(lo, la) }
+    val rfs = cc.map { case (lo, la) => rf(lo, la) }
+    val sepN = Hex.normalAngles(res).map { a =>
+      val ux = math.cos(a); val uy = math.sin(a)
+      s"(ABS(_dx * ${d(ux)} + _dy * ${d(uy)}) > ${d(Hex.apothem(res))} + hw * ${d(math.abs(ux))} + hh * ${d(math.abs(uy))})"
+    }
+    val bias = 1L << 28
+    s"""WITH _b AS (${geomBboxSql(table, grid)}),
+       |_rng AS (
+       |  SELECT doc_id,
+       |    (lon_min + lon_max) / 2.0 AS rcx, (lat_min + lat_max) / 2.0 AS rcy,
+       |    (lon_max - lon_min) / 2.0 AS hw, (lat_max - lat_min) / 2.0 AS hh,
+       |    CAST(CEIL(LEAST(${qfs.mkString(", ")}) - 0.67) AS BIGINT) AS q0,
+       |    CAST(FLOOR(GREATEST(${qfs.mkString(", ")}) + 0.67) AS BIGINT) AS q1,
+       |    CAST(CEIL(LEAST(${rfs.mkString(", ")}) - 0.67) AS BIGINT) AS r0,
+       |    CAST(FLOOR(GREATEST(${rfs.mkString(", ")}) + 0.67) AS BIGINT) AS r1
+       |  FROM _b),
+       |_cq AS (SELECT *, unnest(generate_series(q0, q1)) AS hq FROM _rng),
+       |_cr AS (SELECT *, unnest(generate_series(r0, r1)) AS hr FROM _cq),
+       |_ctr AS (SELECT *,
+       |    ${d(co)} * (${d(sz)} * (${d(sq3)} * hq + ${d(sq3 / 2.0)} * hr)) - ${d(si)} * (${d(sz)} * (1.5 * hr)) AS _hcx,
+       |    ${d(si)} * (${d(sz)} * (${d(sq3)} * hq + ${d(sq3 / 2.0)} * hr)) + ${d(co)} * (${d(sz)} * (1.5 * hr)) AS _hcy
+       |  FROM _cr),
+       |_d AS (SELECT *, _hcx - rcx AS _dx, _hcy - rcy AS _dy FROM _ctr)
+       |SELECT doc_id,
+       |  (((hq + $bias) << 29) | (hr + $bias)) << 5 | $res AS cell_id
+       |FROM _d
+       |WHERE NOT ((ABS(_dx) > ${d(Hex.supportX(res))} + hw)
+       |        OR (ABS(_dy) > ${d(Hex.supportY(res))} + hh)
+       |        OR ${sepN.mkString(" OR ")})
+       |ORDER BY doc_id, cell_id""".stripMargin
   }
 
-  /** SQL mirror of [[spatialTileAssignments]]: tile centre cells computed
-    * with the same arithmetic, joined to the cover. */
-  def spatialTileAssignmentsSql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    val tilePx = grid.width / TileGridN
-    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${graft.ops.WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${graft.ops.WarpOps.D2R} + $lon0"
-    s"""WITH cover AS (${geomCellCoverSql(table, grid, level)}),
-       |tiles AS (
-       |  SELECT tid AS tile_id, ${Cells.cellIdSql(lon, lat, level)} AS cell_id
-       |  FROM (SELECT CAST(i AS BIGINT) AS tid
-       |        FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)))
-       |SELECT c.doc_id, t.tile_id, c.cell_id
-       |FROM cover c JOIN tiles t ON c.cell_id = t.cell_id
-       |ORDER BY doc_id, tile_id""".stripMargin
+  // ---- the doc x tile spatial join ----------------------------------------
+
+  /** One DGGS family of the doc x tile join: `cover` maps a (doc_id,
+    * lon_min, lon_max, lat_min, lat_max) frame to (doc_id, cell_id), and
+    * `cellOf` is the scalar cell of one lon/lat point, bit-identical to the
+    * family's Column form. */
+  final case class CellFamily(cover: DataFrame => DataFrame,
+                              cellOf: (Double, Double) => Long)
+
+  object CellFamily {
+    def quad(level: Int): CellFamily =
+      CellFamily(quadCoverFromBbox(_, level), Cells.cellId(_, _, level))
+    def s2(level: Int): CellFamily =
+      CellFamily(s2RectCoverFromBbox(_, level), Cells.s2CellId(_, _, level))
+    def hex(res: Int): CellFamily =
+      CellFamily(hexCoverFromBbox(_, res), Hex.cellId(_, _, res))
   }
 
-  /** S2 variant of the spatial doc x tile join: the st-rect kernel cover
-    * joined to tile-centre S2 cells — same broadcast equi-join shape as the
-    * quadtree flagship, second DGGS family end-to-end. */
-  def spatialTileAssignmentsS2(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
-    val cover = geomCellCoverS2Rect(docsSpans, grid, level)
+  /** lon/lat of the centre pixel of tile `id` of the grid's TileGridN x
+    * TileGridN split, through the scalar twin of WarpOps.inverseColumns. */
+  def tileCentre(grid: GridRef, id: Int): (Double, Double) = {
     val tilePx = grid.width / TileGridN
-    val tiles = spark.range(TileGridN.toLong * TileGridN)
-      .select(col("id").as("tile_id"),
-        (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
-        (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
+    val prow = (id / TileGridN * tilePx).toDouble + tilePx / 2.0
+    val pcol = (id % TileGridN * tilePx).toDouble + tilePx / 2.0
     val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
-    // staged cell id: the single-Column form's ~40k-node tree rode the
-    // STREAM stage's task binary (9.9 MB) and its per-task deserialization
-    // was the S2 flagship's GC bomb — see Cells.withS2CellId
-    val tileCells = Cells.withS2CellId(tiles, lon, lat, level, "cell_id")
-      .select("tile_id", "cell_id")
-    cover.join(broadcast(tileCells), "cell_id")
+    WarpOps.inverse(grid.crs, t.a * pcol + t.c, t.e * prow + t.f)
+  }
+
+  /** The tile side of the join, (tile_id, cell_id) of every tile centre. It
+    * is a constant of (grid, family), so it is evaluated here on the driver
+    * and ships with the plan as a LocalRelation: the tile side needs no
+    * Spark plan or generated code of its own. */
+  def tileCells(spark: SparkSession, grid: GridRef, family: CellFamily): DataFrame = {
+    import spark.implicits._
+    (0 until TileGridN * TileGridN).map { id =>
+      val (lon, lat) = tileCentre(grid, id)
+      (id.toLong, family.cellOf(lon, lat))
+    }.toDF("tile_id", "cell_id")
+  }
+
+  /** The spatial doc x tile join shared by every cell family: the docs'
+    * geometry bbox, the family's cover exploded over it, and a broadcast
+    * equi-join on cell_id against the driver-built tile side ->
+    * (doc_id, tile_id, cell_id). The rows are already unique: cover cells
+    * are unique per doc and each tile has exactly one centre cell, so the
+    * join output flows straight into downstream aggregates. The join stays
+    * a plain equi-join, so without the hint (both sides large, pre-bucketed
+    * by Hilbert ranges of cell_id at corpus scale) Catalyst plans it as a
+    * sort-merge join. */
+  def spatialJoin(docsSpans: DataFrame, grid: GridRef, family: CellFamily): DataFrame =
+    family.cover(geomBbox(docsSpans, grid))
+      .join(broadcast(tileCells(docsSpans.sparkSession, grid, family)), "cell_id")
       .select("doc_id", "tile_id", "cell_id")
-  }
 
-  /** Hex variant of the spatial doc x tile join: the H3-style cover joined
-    * to tile-centre hex cells — the north_rule's "H3 cell covers ... inside
-    * a broadcast-or-sort-merge spatial join" realized end-to-end on the
-    * third DGGS family. Same plan shape as [[spatialTileAssignments]]. */
-  def spatialTileAssignmentsHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
-    val cover = geomCellCoverHex(docsSpans, grid, res)
-    val tilePx = grid.width / TileGridN
-    val tiles = spark.range(TileGridN.toLong * TileGridN)
-      .select(col("id").as("tile_id"),
-        (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
-        (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
-    val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
-    val tileCells = Hex.withCellId(tiles, lon, lat, res, "cell_id")
-      .select("tile_id", "cell_id")
-    cover.join(broadcast(tileCells), "cell_id")
-      .select("doc_id", "tile_id", "cell_id")
-  }
+  /** Quadtree doc x tile join (the flagship). */
+  def spatialTileAssignments(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame =
+    spatialJoin(docsSpans, grid, CellFamily.quad(level))
 
-  /** DuckDB mirror of [[spatialTileAssignmentsHex]]. */
-  def spatialTileAssignmentsHexSql(table: String, grid: GridRef, res: Int): String = {
+  /** S2 doc x tile join over the st-rect kernel cover. */
+  def spatialTileAssignmentsS2(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame =
+    spatialJoin(docsSpans, grid, CellFamily.s2(level))
+
+  /** Hex doc x tile join over the H3-style cover (the north_rule's "H3 cell
+    * covers ... inside a broadcast-or-sort-merge spatial join"). */
+  def spatialTileAssignmentsHex(docsSpans: DataFrame, grid: GridRef, res: Int): DataFrame =
+    spatialJoin(docsSpans, grid, CellFamily.hex(res))
+
+  /** DuckDB mirror of [[tileCentre]]: (tid, lon, lat) of every tile. */
+  private def tileCentresSql(grid: GridRef): String = {
     val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
     val tilePx = grid.width / TileGridN
     val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
     val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${WarpOps.D2R} + $lon0"
-    val tileSrc = s"SELECT CAST(i AS BIGINT) AS tid FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)"
-    s"""WITH cover AS (${geomCellCoverHexSql(table, grid, res)}),
-       |tiles AS (
-       |  SELECT tid AS tile_id, cell_id FROM (
-       |    ${Hex.cellIdSql(tileSrc, lon, lat, res, Seq("tid"))}))
-       |SELECT c.doc_id, t.tile_id, c.cell_id
-       |FROM cover c JOIN tiles t ON c.cell_id = t.cell_id
-       |ORDER BY 1, 2, 3""".stripMargin
+    val (lon, lat) = inverseSql(grid, s"(${t.a} * $pc + ${t.c})", s"(${t.e} * $pr + ${t.f})")
+    s"""SELECT tid, $lon AS lon, $lat AS lat
+       |FROM (SELECT CAST(i AS BIGINT) AS tid
+       |      FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i))""".stripMargin
   }
 
-  /** DuckDB mirror of [[spatialTileAssignmentsS2]]: the st-rect cover CTE
-    * joined to tile-centre S2 cells, identical CASE/arithmetic lockstep. */
-  def spatialTileAssignmentsS2Sql(table: String, grid: GridRef, level: Int): String = {
-    val t = grid.transform
-    val (r, lon0) = grid.crs.proj match {
-      case Sinusoidal(rr, l0) => (rr, l0)
-      case p => throw new IllegalArgumentException(s"oracle supports sinusoidal, got $p")
-    }
-    val tilePx = grid.width / TileGridN
-    val pr = s"(CAST(tid // $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val pc = s"(CAST(tid % $TileGridN AS DOUBLE) * $tilePx + ${tilePx / 2.0})"
-    val tx = s"(${t.a} * $pc + ${t.c})"
-    val ty = s"(${t.e} * $pr + ${t.f})"
-    val lat = s"(($ty) / $r) / ${WarpOps.D2R}"
-    val lon = s"(($tx) / ($r * COS(($ty) / $r))) / ${WarpOps.D2R} + $lon0"
-    val tileSrc = s"SELECT CAST(i AS BIGINT) AS tid FROM generate_series(0, ${TileGridN * TileGridN - 1}) t(i)"
-    s"""WITH cover AS (${geomCellCoverS2RectSql(table, grid, level)}),
-       |tiles AS (
-       |  SELECT tid AS tile_id, cell_id FROM (
-       |    ${Cells.s2CellIdSql(tileSrc, lon, lat, level, Seq("tid"))}))
+  /** DuckDB mirror of [[spatialJoin]] over a cover and a (tile_id, cell_id)
+    * tile table. */
+  private def spatialJoinSql(coverSql: String, tilesSql: String): String =
+    s"""WITH cover AS ($coverSql),
+       |tiles AS ($tilesSql)
        |SELECT c.doc_id, t.tile_id, c.cell_id
        |FROM cover c JOIN tiles t ON c.cell_id = t.cell_id
        |ORDER BY 1, 2, 3""".stripMargin
-  }
 
-  /** Spatial doc x tile join: docs' geometry cell covers joined to tile
-    * centre cells at the same level -> (doc_id, tile_id) assignments. The
-    * tile side is tiny metadata here; at corpus scale both sides are
-    * partitioned by Hilbert ranges of cell_id and the join co-locates. */
-  def spatialTileAssignments(docsSpans: DataFrame, grid: GridRef, level: Int): DataFrame = {
-    val spark = docsSpans.sparkSession
-    val cover = geomCellCover(docsSpans, grid, level)
-    val tilePx = grid.width / TileGridN
-    val tiles = spark.range(TileGridN.toLong * TileGridN)
-      .select(col("id").as("tile_id"),
-        (expr(s"id div $TileGridN") * tilePx + tilePx / 2.0).as("prow"),
-        (col("id") % TileGridN * tilePx + tilePx / 2.0).as("pcol"))
-    val t = grid.transform
-    val tx = lit(t.a) * col("pcol") + lit(t.c)
-    val ty = lit(t.e) * col("prow") + lit(t.f)
-    val (lon, lat) = WarpOps.inverseColumns(grid.crs, tx, ty)
-    val tileCells = tiles.select(col("tile_id"),
-      Cells.cellIdColumn(lon, lat, level).as("cell_id"))
-    // (doc_id, tile_id, cell_id) is already unique: cover cells are unique
-    // per doc and each tile contributes exactly one centre cell — no
-    // distinct needed, so the join output flows straight into downstream
-    // aggregates with no extra shuffle.
-    cover.join(broadcast(tileCells), "cell_id")
-      .select("doc_id", "tile_id", "cell_id")
-  }
+  def spatialTileAssignmentsSql(table: String, grid: GridRef, level: Int): String =
+    spatialJoinSql(geomCellCoverSql(table, grid, level),
+      s"""SELECT tid AS tile_id, ${Cells.cellIdSql("lon", "lat", level)} AS cell_id
+         |FROM (${tileCentresSql(grid)})""".stripMargin)
+
+  def spatialTileAssignmentsS2Sql(table: String, grid: GridRef, level: Int): String =
+    spatialJoinSql(geomCellCoverS2RectSql(table, grid, level),
+      s"""SELECT tid AS tile_id, cell_id FROM (
+         |  ${Cells.s2CellIdSql(tileCentresSql(grid), "lon", "lat", level, Seq("tid"))})""".stripMargin)
+
+  def spatialTileAssignmentsHexSql(table: String, grid: GridRef, res: Int): String =
+    spatialJoinSql(geomCellCoverHexSql(table, grid, res),
+      s"""SELECT tid AS tile_id, cell_id FROM (
+         |  ${Hex.cellIdSql(tileCentresSql(grid), "lon", "lat", res, Seq("tid"))})""".stripMargin)
 }

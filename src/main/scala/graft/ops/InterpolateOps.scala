@@ -69,8 +69,8 @@ object InterpolateOps {
       // round's `remaining` cache has been dropped, so the whole ring join
       // + window re-executed from scratch (observed: the final count's job
       // repeated every round's join). Persist the narrow winner projection
-      // (one bounded row per settled pixel); the blocks die with the query
-      // result's RDDs — never a cross-run cache.
+      // (one bounded row per settled pixel). The blocks stay cached after
+      // the query until someone unpersists them.
       val settled =
         (if (b >= maxDim) winners
          else winners.filter(col("d2") <= b.toLong * b))
@@ -240,8 +240,9 @@ object InterpolateOps {
       // quadrant pivot later), and the later one re-executed the whole
       // ring join + window because the round's `remaining` cache is gone
       // by then — persist the narrow winner rows (the count below
-      // materializes them; blocks die with the query result's RDDs). The
-      // final round has a single consumer and needs no cache.
+      // materializes them; the blocks stay cached after the query until
+      // someone unpersists them). The final round has a single consumer
+      // and needs no cache.
       val newWinners = {
         val nw = settled.select("row", "col", "quad", "v_row", "v_col", "v_value")
         if (last) nw else nw.persist()

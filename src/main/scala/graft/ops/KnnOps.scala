@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, KeyValueGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,11 @@ import org.apache.spark.sql.functions._
   *    spec); callers size cellSize from target density. At scale the bucket
   *    key is also the partition key, so candidate generation is co-located
   *    and the only shuffle is the final top-k.
+  *  - [[knnKdTree]] / [[knnKdTreeQuerySide]]: the same ring buckets, but
+  *    one side replicates to its ring, both sides are hash-partitioned on
+  *    the bucket (bx, by) into spark.sql.shuffle.partitions, and a typed
+  *    cogroup on (bx, by) that reuses that partitioning builds one k-d tree
+  *    per bucket — every core gets buckets, however few bytes move.
   */
 object KnnOps {
 
@@ -112,12 +117,32 @@ object KnnOps {
     }
   }
 
+  /** Each (id, x, y) point once per bucket of its (2*ring+1)^2 bucket ring
+    * (ring 0: its own bucket), hash-partitioned on the bucket (bx, by) into
+    * the session's spark.sql.shuffle.partitions and grouped by it. Both
+    * sides of a k-d tree cogroup come from here, so the cogroup's
+    * clustering on (bx, by) reuses that partitioning (no second exchange)
+    * and runs as that many tasks; a byte-sized shuffle would let AQE
+    * coalesce the small kNN stage into ONE task. */
+  private def bucketGroups(pts: DataFrame, cellSize: Double, ring: Int)
+      : KeyValueGroupedDataset[(Long, Long), (Long, Double, Double, Long, Long)] = {
+    val spark = pts.sparkSession
+    import spark.implicits._
+    pts.as[(Long, Double, Double)].flatMap { case (id, x, y) =>
+      val bx = math.floor(x / cellSize).toLong; val by = math.floor(y / cellSize).toLong
+      for (dx <- -ring to ring; dy <- -ring to ring) yield (id, x, y, bx + dx, by + dy)
+    }.toDF("id", "x", "y", "bx", "by")
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("bx"), col("by"))
+      .groupBy("bx", "by").as[(Long, Long), (Long, Double, Double, Long, Long)]
+  }
+
   /** kNN via cell-ring expansion + a per-partition k-d tree — the literal
     * north_rule formulation. Targets replicate to the (2*ring+1)^2 buckets
-    * they serve; queries stay single-bucket; a typed cogroup builds ONE
-    * k-d tree per bucket and streams that bucket's queries through it. vs
+    * they serve; queries stay single-bucket; both sides are hash-partitioned
+    * on the bucket (bx, by) and a typed cogroup builds ONE k-d tree per
+    * bucket and streams that bucket's queries through it. vs
     * [[knnCellJoin]]: no (query, candidate) pair rows ever materialize and
-    * the top-k happens inside the cogroup — one shuffle total, no window
+    * the top-k happens inside the cogroup — one shuffle per side, no window
     * exchange after. Same exactness condition (k-th NN within
     * ring*cellSize), spec-asserted equal to brute force and to the cell
     * join. */
@@ -125,24 +150,14 @@ object KnnOps {
                 cellSize: Double, ring: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val q = queries.select(col("q_id"), col("qx"), col("qy")).as[(Long, Double, Double)]
-      .groupByKey { case (_, x, y) =>
-        (math.floor(x / cellSize).toLong, math.floor(y / cellSize).toLong) }
-    val t = targets.select(col("t_id"), col("tx"), col("ty")).as[(Long, Double, Double)]
-      .flatMap { p =>
-        val bx = math.floor(p._2 / cellSize).toLong
-        val by = math.floor(p._3 / cellSize).toLong
-        for (dx <- -ring to ring; dy <- -ring to ring)
-          yield ((bx + dx, by + dy), p)
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
+    val q = bucketGroups(queries.select("q_id", "qx", "qy"), cellSize, 0)
+    val t = bucketGroups(targets.select("t_id", "tx", "ty"), cellSize, ring)
     q.cogroup(t) { (_, qs, ts) =>
-      val pts = ts.toArray
+      val pts = ts.map(p => (p._1, p._2, p._3)).toArray
       if (pts.isEmpty) Iterator.empty
       else {
         val tree = KdTree.build(pts)
-        qs.flatMap { case (qid, qx, qy) =>
+        qs.flatMap { case (qid, qx, qy, _, _) =>
           tree.query(qx, qy, k).iterator.zipWithIndex.map { case ((d2, tid), i) =>
             (qid, tid, d2, i + 1)
           }
@@ -154,34 +169,25 @@ object KnnOps {
   /** Query-side sibling of [[knnKdTree]] for the realistic corpus shape
     * Q ≪ T: QUERIES replicate to their (2*ring+1)^2 probe buckets — the
     * small side amplifies — while each target stays in exactly ONE bucket
-    * (no 49x blowup of the big side). One k-d tree per target bucket serves
-    * that bucket's probing queries with a per-bucket top-k; a second-stage
-    * groupBy merges the ≤(2*ring+1)^2 * k candidates per query into the
-    * global top-k. Exact under the same ring condition: the true j-th
-    * neighbour (j ≤ k) is within its own bucket's top-k for the query, so
-    * it survives to the merge. Two shuffles total, both sized by Q. */
+    * (no 49x blowup of the big side). Both sides are hash-partitioned on the
+    * bucket as in [[knnKdTree]]; one k-d tree per target bucket serves
+    * that bucket's probing queries with a per-bucket top-k, and a
+    * second-stage groupBy merges the ≤(2*ring+1)^2 * k candidates per query
+    * into the global top-k. Exact under the same ring condition: the true
+    * j-th neighbour (j ≤ k) is within its own bucket's top-k for the query,
+    * so it survives to the merge. */
   def knnKdTreeQuerySide(queries: DataFrame, targets: DataFrame, k: Int,
                          cellSize: Double, ring: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val q = queries.select(col("q_id"), col("qx"), col("qy")).as[(Long, Double, Double)]
-      .flatMap { p =>
-        val bx = math.floor(p._2 / cellSize).toLong
-        val by = math.floor(p._3 / cellSize).toLong
-        for (dx <- -ring to ring; dy <- -ring to ring)
-          yield ((bx + dx, by + dy), p)
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-    val t = targets.select(col("t_id"), col("tx"), col("ty")).as[(Long, Double, Double)]
-      .groupByKey { case (_, x, y) =>
-        (math.floor(x / cellSize).toLong, math.floor(y / cellSize).toLong) }
+    val q = bucketGroups(queries.select("q_id", "qx", "qy"), cellSize, ring)
+    val t = bucketGroups(targets.select("t_id", "tx", "ty"), cellSize, 0)
     val candidates = t.cogroup(q) { (_, ts, qs) =>
-      val pts = ts.toArray
+      val pts = ts.map(p => (p._1, p._2, p._3)).toArray
       if (pts.isEmpty) Iterator.empty
       else {
         val tree = KdTree.build(pts)
-        qs.flatMap { case (qid, qx, qy) =>
+        qs.flatMap { case (qid, qx, qy, _, _) =>
           tree.query(qx, qy, k).iterator.map { case (d2, tid) => (qid, tid, d2) }
         }
       }

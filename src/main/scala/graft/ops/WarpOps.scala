@@ -55,6 +55,19 @@ object WarpOps {
     case p => throw new IllegalArgumentException(s"no Column inverse for $p (use tile kernel path)")
   }
 
+  /** Scalar twin of [[inverseColumns]] in its op order (`/ D2R`, where the
+    * projections' own inverses multiply by R2D), so a point evaluated on the
+    * driver lands on the same cell as the Column form, bit for bit. */
+  def inverse(from: Crs, x: Double, y: Double): (Double, Double) = from.proj match {
+    case LongLat => (x, y)
+    case Sinusoidal(r, lon0) =>
+      val phi = y / r
+      ((x / (r * math.cos(phi))) / D2R + lon0, phi / D2R)
+    case WebMercator =>
+      ((x / Projection.WGS84_A) / D2R, math.atan(math.sinh(y / Projection.WGS84_A)) / D2R)
+    case p => throw new IllegalArgumentException(s"no scalar inverse for $p")
+  }
+
   /** Karney inverse series + fixed-point isometric-latitude inverse, unrolled
     * into Column arithmetic (same iteration count as the scalar path so the
     * two are bit-identical). */

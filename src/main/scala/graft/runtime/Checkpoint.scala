@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Checkpointed, idempotently-resumable job runner (north_rule: "resumable
@@ -32,6 +33,8 @@ object Checkpoint {
     Paths.get(root, job, "_metrics")
   private def stageDir(root: String, job: String, stage: String) =
     Paths.get(root, job, s"stage_$stage").toString
+  private def schemaFile(root: String, job: String, stage: String) =
+    Paths.get(root, job, "_schema", s"$stage.json")
 
   def doneBuckets(root: String, job: String, stage: String): Set[Int] = {
     val d = lineageDir(root, job, stage)
@@ -82,6 +85,11 @@ object Checkpoint {
       val remaining =
         if (done.isEmpty) withBucket
         else withBucket.filter(col("_bucket").isin(todo.map(Integer.valueOf): _*))
+      // the written schema is kept beside the lineage: an empty stage
+      // leaves no parquet footer to infer it from on the read back
+      val sf = schemaFile(root, job, stage)
+      Files.createDirectories(sf.getParent)
+      Files.write(sf, withBucket.schema.json.getBytes(StandardCharsets.UTF_8))
       // dynamic partition overwrite: only the buckets being (re)written are
       // replaced; committed buckets' directories are untouched.
       remaining.write
@@ -91,7 +99,7 @@ object Checkpoint {
         .parquet(out)
       val wallMs = (System.nanoTime() - t0) / 1000000
       // per-bucket lineage commit (rows from the written files' footers)
-      val counts = spark.read.parquet(out)
+      val counts = readStage(spark, root, job, stage)
         .filter(col("_bucket").isin(todo.map(Integer.valueOf): _*))
         .groupBy("_bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -103,6 +111,14 @@ object Checkpoint {
       recordMetric(root, job, stage, "buckets_written", todo.size.toDouble)
       recordMetric(root, job, stage, "wall_ms", wallMs.toDouble)
     }
-    spark.read.parquet(out).drop("_bucket")
+    readStage(spark, root, job, stage).drop("_bucket")
+  }
+
+  /** The stage's table, read with the schema it was written with. */
+  private def readStage(spark: SparkSession, root: String, job: String,
+                        stage: String): DataFrame = {
+    val schema = DataType.fromJson(new String(
+      Files.readAllBytes(schemaFile(root, job, stage)), StandardCharsets.UTF_8))
+    spark.read.schema(schema.asInstanceOf[StructType]).parquet(stageDir(root, job, stage))
   }
 }

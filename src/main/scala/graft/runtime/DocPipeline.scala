@@ -49,7 +49,7 @@ object DocPipeline {
     * 0.088°). Round 3 ran this leg at level 7 — cells ~8x coarser than the
     * quadtree leg's, collapsing every tile centre into a couple of cells and
     * inflating the equi-join output to 38.7 assignment rows/doc vs the
-    * quadtree's ~3 (77M vs 6M rows at 2M docs; S2Probe measurement). That
+    * quadtree's ~3 (77M vs 6M rows at 2M docs). That
     * join fan-out, not the cover kernel, was the bulk of the 397s/22.4s
     * BENCH_r03 S2 leg. At level 10 the three legs do equivalent semantic
     * work: 2.69 cover cells/doc and 4.0 assignment rows/doc. */
@@ -68,7 +68,7 @@ object DocPipeline {
     * 360/2^12 = 0.088°. Round 4 ran this leg at res 5 (diameter 0.20°,
     * ~2.6x coarser): the 64 flagship tile centres collapsed into 13 hex
     * cells and the equi-join emitted 11.2 assignment rows/doc vs the
-    * quadtree's ~4 (22.4M vs 8M rows at 2M docs; HexProbe measurement) —
+    * quadtree's ~4 (22.4M vs 8M rows at 2M docs) —
     * join fan-out, not the SAT cover, was the hex leg's 2.5x gap. At res 6
     * the three legs do equivalent semantic work: 3.15 cover cells/doc,
     * 3.76 assignment rows/doc, 48 distinct tile cells. */

@@ -87,6 +87,7 @@ object CurationOps {
     // action, the bucket-totals collect AND the final query; without the
     // persist it tokenized the corpus three times (guide §5: cache only
     // what is reused and expensive to recompute — two longs per document).
+    // The blocks stay cached after the query until someone unpersists them.
     val toks = TextOps.tokenCounts(docs)
       .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens"))
       .filter(col("n_tokens") > 0)
@@ -222,8 +223,8 @@ object CurationOps {
        |    len(regexp_extract_all(text, '${TextOps.BpeTokenRegex}')) AS n_tokens
        |  FROM $table),
        |w AS (SELECT doc_id, n_tokens,
-       |    sum(n_tokens) OVER (ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |    CAST(sum(n_tokens) OVER (ORDER BY doc_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
        |  FROM t WHERE n_tokens > 0)
        |SELECT doc_id, n_tokens, cum - n_tokens AS tok_start,
        |  (cum - n_tokens) // $budget AS chunk_first,

@@ -2,6 +2,9 @@ package graft.docs
 
 import graft.{Queries, SparkTestBase}
 import graft.core._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 class DocOpsSpec extends SparkTestBase {
@@ -205,17 +208,7 @@ class DocOpsSpec extends SparkTestBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // strip the explicit broadcast hint by rebuilding the join manually
       val cover = DocOps.geomCellCover(spans, Synth.modisGrid, 12)
-      val tilePx = Synth.modisGrid.width / DocOps.TileGridN
-      val t = Synth.modisGrid.transform
-      val tiles = spark.range(DocOps.TileGridN.toLong * DocOps.TileGridN)
-        .select(col("id").as("tile_id"),
-          (expr(s"id div ${DocOps.TileGridN}") * tilePx + tilePx / 2.0).as("prow"),
-          (col("id") % DocOps.TileGridN * tilePx + tilePx / 2.0).as("pcol"))
-      val tx = lit(t.a) * col("pcol") + lit(t.c)
-      val ty = lit(t.e) * col("prow") + lit(t.f)
-      val (lon, lat) = graft.ops.WarpOps.inverseColumns(Synth.modisGrid.crs, tx, ty)
-      val tileCells = tiles.select(col("tile_id"),
-        Cells.cellIdColumn(lon, lat, 12).as("cell_id"))
+      val tileCells = DocOps.tileCells(spark, Synth.modisGrid, DocOps.CellFamily.quad(12))
       val joined = cover.join(tileCells, "cell_id").select("doc_id", "tile_id")
       val plan = joined.queryExecution.executedPlan.toString()
       assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n$plan")
@@ -223,6 +216,71 @@ class DocOpsSpec extends SparkTestBase {
       assert(smResult == broadcastResult,
         "sort-merge and broadcast arms must produce identical assignments")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+  }
+
+  /** Executed-plan copies of the interpreted span lookup (the `filter(`
+    * HOF of the bbox head). Counted on the expression trees: the plan's
+    * string form truncates long projection lists. */
+  private def spanLookups(df: DataFrame): Int = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case node =>
+      node.expressions.map(_.collect { case f: ArrayFilter => f }.size).sum
+    }.sum
+  }
+
+  test("every family's cover and doc-tile join evaluate the span lookup once") {
+    val g = Synth.modisGrid
+    Seq(
+      "quad cover" -> DocOps.geomCellCover(spans, g, 12),
+      "quad join" -> DocOps.spatialTileAssignments(spans, g, 12),
+      "s2 cover" -> DocOps.geomCellCoverS2Rect(spans, g, 10),
+      "s2 join" -> DocOps.spatialTileAssignmentsS2(spans, g, 10),
+      "hex cover" -> DocOps.geomCellCoverHex(spans, g, 5),
+      "hex join" -> DocOps.spatialTileAssignmentsHex(spans, g, 5)
+    ).foreach { case (name, df) =>
+      assert(spanLookups(df) == 1,
+        s"$name: ${spanLookups(df)} span lookups in\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("driver-built tile table equals the Column-form tile cells bit for bit") {
+    val g = Synth.modisGrid
+    val t = g.transform
+    val tilePx = g.width / DocOps.TileGridN
+    // the tile side as Spark Columns: tile-centre pixels from spark.range
+    // through WarpOps.inverseColumns
+    val tiles = spark.range(DocOps.TileGridN.toLong * DocOps.TileGridN)
+      .select(col("id").as("tile_id"),
+        (expr(s"id div ${DocOps.TileGridN}") * tilePx + tilePx / 2.0).as("prow"),
+        (col("id") % DocOps.TileGridN * tilePx + tilePx / 2.0).as("pcol"))
+    val (lon, lat) = graft.ops.WarpOps.inverseColumns(g.crs,
+      lit(t.a) * col("pcol") + lit(t.c), lit(t.e) * col("prow") + lit(t.f))
+    // centres: identical bits
+    tiles.select(col("tile_id"), lon, lat).collect().foreach { r =>
+      val (dl, da) = DocOps.tileCentre(g, r.getLong(0).toInt)
+      assert(java.lang.Double.doubleToRawLongBits(dl) ==
+               java.lang.Double.doubleToRawLongBits(r.getDouble(1)) &&
+             java.lang.Double.doubleToRawLongBits(da) ==
+               java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        s"tile ${r.getLong(0)}: driver centre ($dl, $da) vs Column (${r.getDouble(1)}, ${r.getDouble(2)})")
+    }
+    // cells at every level the catalog and the pipelines join at
+    def cells(df: DataFrame): Map[Long, Long] =
+      df.select("tile_id", "cell_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cases = Seq(12).map(l => s"quad $l" ->
+        (DocOps.CellFamily.quad(l), tiles.withColumn("cell_id", Cells.cellIdColumn(lon, lat, l)))) ++
+      Seq(7, 10).map(l => s"s2 $l" ->
+        (DocOps.CellFamily.s2(l), Cells.withS2CellId(tiles, lon, lat, l, "cell_id"))) ++
+      Seq(5, 6).map(r => s"hex $r" ->
+        (DocOps.CellFamily.hex(r), Hex.withCellId(tiles, lon, lat, r, "cell_id")))
+    cases.foreach { case (name, (family, columnForm)) =>
+      val driver = cells(DocOps.tileCells(spark, g, family))
+      assert(driver.size == DocOps.TileGridN * DocOps.TileGridN)
+      assert(driver == cells(columnForm), s"$name: driver tile cells differ from the Column form")
+    }
   }
 
   test("spatial doc-tile join: assignments match pure-Scala recompute") {

@@ -1,8 +1,10 @@
 package graft.ops
 
 import graft.{Queries, SparkTestBase}
+import org.apache.spark.sql.execution.CoGroupExec
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 
-class KnnOpsSpec extends SparkTestBase {
+class KnnOpsSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("grid-bucketed kNN equals brute force when the ring guarantee holds") {
     val q = Queries.knnQueryPoints(spark)
@@ -26,6 +28,26 @@ class KnnOpsSpec extends SparkTestBase {
       .map(r => ((r.getLong(0), r.getInt(3)), (r.getLong(1), r.getDouble(2)))).toMap
     assert(kd.size == bf.size)
     assert(kd == bf, "k-d tree kNN must match brute force (ids AND bit-exact dist2)")
+  }
+
+  test("k-d tree cogroup runs on both sides' bucket partitioning, uncoalesced") {
+    val q = Queries.knnQueryPoints(spark)
+    val t = Queries.knnTargetPoints(spark)
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Seq(KnnOps.knnKdTree(q, t, 5, cellSize = 4632.0, ring = 3),
+        KnnOps.knnKdTreeQuerySide(q, t, 5, cellSize = 4632.0, ring = 3)).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val cogroup = collect(plan) { case c: CoGroupExec => c }
+      assert(cogroup.size == 1, s"one cogroup expected:\n$plan")
+      // exactly the two bucket exchanges feed it, each at the session's
+      // partition count, and AQE read them as they are (no coalescing)
+      val feeds = collect(cogroup.head) { case s: ShuffleQueryStageExec => s }
+      assert(feeds.size == 2 && feeds.forall(_.outputPartitioning.numPartitions == n),
+        s"cogroup must read two $n-partition bucket exchanges:\n$plan")
+      assert(collect(cogroup.head) { case r: AQEShuffleReadExec => r }.isEmpty,
+        s"cogroup input was coalesced:\n$plan")
+    }
   }
 
   test("query-side k-d tree kNN equals brute force (Q<<T shape, no target blowup)") {

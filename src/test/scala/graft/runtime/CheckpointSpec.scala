@@ -61,4 +61,22 @@ class CheckpointSpec extends SparkTestBase {
     assert(metrics.exists(_.contains("\"stage\":\"ingest\"")))
     assert(metrics.exists(_.contains("\"stage\":\"agg\"")))
   }
+
+  test("empty stage commits, resumes and reads back with the input schema") {
+    val root = freshRoot()
+    val input = spark.range(100)
+      .select(col("id"), (col("id") * 2.5).as("v"), col("id").cast("string").as("s"))
+      .filter(col("v") < 0)
+    def names(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val out = Checkpoint.runStage(spark, root, "job4", "empty", "id", 4)(input)
+    assert(out.count() == 0)
+    assert(names(out) == names(input))
+    assert(Checkpoint.doneBuckets(root, "job4", "empty").size == 4)
+    // resume: every bucket is committed, so the source is not recomputed
+    val again = Checkpoint.runStage(spark, root, "job4", "empty", "id", 4) {
+      throw new RuntimeException("source must not be recomputed")
+    }
+    assert(again.count() == 0)
+    assert(names(again) == names(input))
+  }
 }

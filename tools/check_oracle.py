@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: read each query's parquet
 dump from Verify, run its oracle SQL in DuckDB over the sf tables, sort by
-all columns, and compare.
+all columns, and compare: each column's dtype kind must match, then every value.
 Usage: check_oracle.py <outDir> <sfDir> [q1,q2,...]
 The optional third arg restricts the sweep (mirrors Verify's filter arg);
 DUCKDB_MEM / DUCKDB_THREADS bound the oracle engine so a heavy oracle
@@ -49,11 +49,21 @@ for name, sql in sorted(oracle.items()):
         print(f"[ROWS] {name}: spark={len(sd)} duck={len(dd)}"); fails += 1; continue
     sd = sd.sort_values(list(sd.columns)).reset_index(drop=True)
     dd = dd.sort_values(list(dd.columns)).reset_index(drop=True)
-    # exact compare (driver hashes values; emulate strictness)
+    # exact compare (driver hashes values; emulate strictness): a change of
+    # dtype kind is a failure of its own, never cast away (a HUGEINT sum
+    # arrives as float64 and renders 5.0 where Spark's long renders 5);
+    # integer widths (int32 vs int64) render alike and compare by value
+    def kind(dt):
+        return "int" if dt.kind in "iu" else dt.kind
+    dtypes = [(c, sd[c].dtype, dd[c].dtype) for c in sd.columns
+              if kind(sd[c].dtype) != kind(dd[c].dtype)]
+    if dtypes:
+        print(f"[DTYPE] {name}: " + ", ".join(f"{c}: spark={a} duck={b}" for c, a, b in dtypes))
+        fails += 1; continue
     try:
         same = True
         for c in sd.columns:
-            a, b = sd[c], dd[c].astype(sd[c].dtype)
+            a, b = sd[c], dd[c]
             if not (a.equals(b) or (a.astype(str).equals(b.astype(str)))):
                 neq = (a.astype(str) != b.astype(str))
                 print(f"[VAL] {name}.{c}: {int(neq.sum())} diffs; first: "

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{GridRef, Synth}
+import graft.docs.DocOps
 import graft.ops.{MergeOps, Raster, WarpOps, WindowOps}
 import graft.runtime.DocPipeline
 import org.apache.spark.sql.SparkSession
@@ -24,16 +25,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = session(cpus)
 
     // scale factor from the directory name (sf0.001 / sf0.01 / sf0.1)
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
@@ -59,7 +52,7 @@ object Bench {
       transform = Synth.modisGrid.transform.compose(
         graft.core.Affine.scale(200.0 / side, 200.0 / side)),
       width = side, height = side)
-    val par = cpus.toInt * 4
+    val par = cpus * 4
 
     def rasterRun(): Unit = {
       val a = Raster(Synth.pixels(spark, bigGrid, parallelism = par), bigGrid)
@@ -104,23 +97,25 @@ object Bench {
         mergedGrid, dst, ts).count(): Unit
     }
 
-    // hex flagship granularity (default 6 = the quadtree level-12 pitch
-    // match); override for same-window A/B attribution measurements only
+    // The three doc legs do the same semantic work at matched cell pitch.
+    // An S2 face spans 90° where the planar quadtree spans 360°, so S2 level
+    // 10 has quadtree level 12's pitch (90/2^10 = 360/2^12 = 0.088°), and a
+    // res-6 hex is sqrt(3)*R0/sqrt(7)^6 = 0.0757° across. A coarser family
+    // collapses the 64 tile centres into a few cells, and the equi-join's
+    // fan-out, not the cover, then dominates the leg.
+    // SPARK_GRAFT_HEX_RES overrides the hex res for same-window A/B
+    // attribution measurements only.
     val hexRes = sys.env.getOrElse("SPARK_GRAFT_HEX_RES", "6").toInt
+    def docLeg(name: String, family: DocOps.CellFamily) = (name,
+      () => { DocPipeline.run(spark, nDocs / 100, family, parallelism = cpus); () },
+      () => { DocPipeline.run(spark, nDocs, family, parallelism = par); () })
 
     // every flagship leg as (name, warmup, run); measurement below is ONE
     // interleaved min-of-rounds loop so a host-throttle burst hits all legs
     // equally (the same protocol the catalog sweep uses)
     val legs: Seq[(String, () => Unit, () => Unit)] = Seq(
-      ("doc",
-        () => { DocPipeline.run(spark, nDocs / 100, level = 12, parallelism = cpus.toInt); () },
-        () => { DocPipeline.run(spark, nDocs, level = 12, parallelism = par); () }),
-      ("s2",
-        () => { DocPipeline.runS2(spark, nDocs / 100, parallelism = cpus.toInt); () },
-        () => { DocPipeline.runS2(spark, nDocs, parallelism = par); () }),
-      ("hex",
-        () => { DocPipeline.runHex(spark, nDocs / 100, res = hexRes, parallelism = cpus.toInt); () },
-        () => { DocPipeline.runHex(spark, nDocs, res = hexRes, parallelism = par); () }),
+      docLeg("doc", DocOps.CellFamily.quad(12)), docLeg("s2", DocOps.CellFamily.s2(10)),
+      docLeg("hex", DocOps.CellFamily.hex(hexRes)),
       ("raster", () => (), () => rasterRun()),
       ("tiles", () => tilesSetup(), () => tilesRun()))
 
@@ -219,5 +214,21 @@ object Bench {
       f""""doc_pipeline_hex_sec":$docHexSec%.2f,""" +
       f""""loadavg_start":$laStart%.1f,"loadavg_end":${loadavg()}%.1f}""")
     spark.stop()
+  }
+
+  /** The local[cpus] session of every measuring main (Bench, Measure,
+    * Verify, ScalingBench): one config list, so their numbers are taken
+    * under the same settings. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.sources.GraftExtensions")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

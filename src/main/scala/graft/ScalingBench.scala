@@ -1,7 +1,7 @@
 package graft
 
+import graft.docs.DocOps
 import graft.runtime.DocPipeline
-import org.apache.spark.sql.SparkSession
 
 /** Two-parallelism scaling evidence (BASELINE.md protocol: same job at
   * local[N] and local[4N] on identical input; efficiency =
@@ -13,23 +13,13 @@ import org.apache.spark.sql.SparkSession
   * line per measured run plus the summary. */
 object ScalingBench {
 
-  def sessionAt(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def measure(cpus: Int, nDocs: Long, warm: Boolean): Double = {
-    val spark = sessionAt(cpus)
-    if (warm) DocPipeline.run(spark, math.max(1000L, nDocs / 20), parallelism = cpus * 4)
+    val spark = Bench.session(cpus)
+    val quad = DocOps.CellFamily.quad(12)
+    if (warm) DocPipeline.run(spark, math.max(1000L, nDocs / 20), quad, parallelism = cpus * 4)
     val la = Bench.loadavg()
     val t0 = System.nanoTime()
-    val (rows, tiles) = DocPipeline.run(spark, nDocs, parallelism = cpus * 4)
+    val (rows, tiles) = DocPipeline.run(spark, nDocs, quad, parallelism = cpus * 4)
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"""{"level":"local[$cpus]","n_docs":$nDocs,"sec":$sec%.2f,"docs_per_sec":${nDocs / sec}%.0f,"assignments":$rows,"tiles":$tiles,"loadavg":$la%.1f}""")
     spark.stop()

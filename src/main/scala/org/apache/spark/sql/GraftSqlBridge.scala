@@ -1,11 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the private[sql] Column<->Expression conversions that custom
   * Catalyst expressions need in Spark 4.x (the pre-4.0 `new Column(expr)`
-  * constructor is gone). */
+  * constructor is gone), and to the private[spark] listener bus. */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** Returns once every event posted so far has reached every listener. */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
